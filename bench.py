@@ -180,6 +180,17 @@ def main() -> None:
     sf = float(m.group(1).rstrip(".")) if m else -1.0
     spark = get_spark(app_name="etl-pipeline-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # the core label names the session's real parallelism; a run whose
+    # SPARK_GRAFT_CPUS disagrees with it would write a mislabelled capture
+    cpus = spark.sparkContext.defaultParallelism
+    env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if env_cpus is not None and env_cpus != str(cpus):
+        print(
+            f"BENCH-ERROR SPARK_GRAFT_CPUS={env_cpus} but the session's"
+            f" defaultParallelism is {cpus}",
+            file=sys.stderr,
+        )
+        sys.exit(2)
     _ensure_loaded()
 
     # No silent caps: HEADLINE keeps its historical order (cross-round
@@ -233,7 +244,6 @@ def main() -> None:
         timings[name] = round(best, 3)
         total += best
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     metric = (
         "headline suite wall clock (noop sink, best-of-2 per query,"
         " session memos + cache cleared before every pass)"
@@ -244,7 +254,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "coverage": {"benched": len(suite), "registered": len(REGISTRY)},
     }
     if errors:
@@ -275,7 +285,7 @@ def main() -> None:
         "value": round(total, 3),
         "unit": "sec",
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "coverage": out["coverage"],
         "error_count": len(errors),
         "queries_full": f"bench_out_c{cpus}.json",

@@ -22,23 +22,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_pipeline_spark.sources.star import _events_ts_to_epoch_ns, footer_schema
+
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the events table as a file stream with an event_time column."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     # the file-stream source requires a directory: stream the sf_dir with a
-    # glob selecting only the events file
+    # glob selecting only the events file, against the batch loader's
+    # footer schema (no inference job, no session conf)
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(footer_schema(spark, f"{sf_dir}/events.parquet", "events"))
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
     # normalize ts to epoch-ns bigint whatever the parquet physical type —
     # the one shared tz-proof conversion (works on streaming DataFrames too)
-    from etl_pipeline_spark.sources.star import _events_ts_to_epoch_ns
-
     raw = _events_ts_to_epoch_ns(raw)
     return raw.withColumn("event_time", F.timestamp_micros(F.expr("ts div 1000")))
 

@@ -241,7 +241,9 @@ def test_price_elasticity_excludes_log_domain_violations(spark, tmp_path):
     ]
     sf = _write_lineitem(spark, tmp_path, rows)
     part = spark.createDataFrame(
-        [(1, "BRAND_1")], "p_partkey bigint, p_brand string"
+        [(1, "part 1", "BRAND_1", "STANDARD", 1, 10.0)],
+        "p_partkey bigint, p_name string, p_brand string, p_type string,"
+        " p_size int, p_retailprice double",
     )
     part.coalesce(1).write.parquet(str(tmp_path / "part.parquet"))
     spec = REGISTRY["price_elasticity_loglog"]

@@ -823,9 +823,12 @@ def test_exact_shingle_verifiers_are_df_capped(spark):
         # equi-self-join — the plan must carry the pair-generation
         # Generate over the capped grouped relation and NO sort-merge
         # join on the shingle column (the joins that remain are the
-        # doc-keyed size lookups)
+        # doc-keyed size lookups). The formatted plan lists a join's keys
+        # on the lines under its "(N) SortMergeJoin" header, so the check
+        # reads each node's block, not a single line.
         assert "explode(flatten(transform(docs#" in plan, q
-        assert not re.search(r"SortMergeJoin.*shingle", plan), q
+        smj_blocks = [b for b in plan.split("\n\n") if re.match(r"\(\d+\) SortMergeJoin", b)]
+        assert not any("shingle" in b for b in smj_blocks), (q, smj_blocks)
 
 
 def test_df_cap_drops_hot_shingles(spark):

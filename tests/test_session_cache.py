@@ -81,3 +81,24 @@ def test_token_and_bigram_caches_participate_in_lifecycle(spark):
     clear_caches(spark)
     assert key not in _TOKEN_CACHE and key not in _BIGRAM_CACHE
     assert not tk.storageLevel.useMemory and not bg.storageLevel.useMemory
+
+
+def test_sql_query_registers_only_the_views_it_names(spark):
+    from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded
+    from etl_pipeline_spark.sources.star import TABLES
+
+    _ensure_loaded()
+    clear_caches(spark)  # empties the view memo: every named view re-registers
+    for t in TABLES:
+        spark.catalog.dropTempView(t)
+    # a caller's own temp view that happens to share a star table's name
+    spark.range(3).toDF("o_orderkey").createOrReplaceTempView("orders")
+    try:
+        # its SQL names only `customer`
+        REGISTRY["sql_top_customer_per_segment"].spark_fn(spark, SF_DIR).collect()
+        views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        assert views & set(TABLES) == {"customer", "orders"}
+        caller = spark.table("orders")
+        assert caller.columns == ["o_orderkey"] and caller.count() == 3
+    finally:
+        spark.catalog.dropTempView("orders")
